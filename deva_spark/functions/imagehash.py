@@ -35,24 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from deva_spark.functions.multimodal import decode_image, resize_image
-
-#: persisted (id, hash) synopses created by :func:`hamming_neardup_pairs`
-#: (and the videofp pair builders, which share this registry), released
-#: by :func:`release_synopsis_cache` — the vectors._NEARDUP_CACHE
-#: discipline (ADVICE r14: plan-builder persists with no release handle
-#: accumulate cached synopses in a long-lived session until clearCache).
-_SYNOPSIS_CACHE: list[DataFrame] = []
-
-
-def release_synopsis_cache() -> int:
-    """Unpersist every hash synopsis the pair builders cached; returns
-    how many were released. Safe any time after the caller has
-    materialized its result."""
-    n = 0
-    while _SYNOPSIS_CACHE:
-        _SYNOPSIS_CACHE.pop().unpersist()
-        n += 1
-    return n
+from deva_spark.session import persist_now
 
 
 def _dct_basis(n: int) -> np.ndarray:
@@ -265,12 +248,10 @@ def hamming_neardup_pairs(
     # KBs per million images — and the eager count() is what guarantees
     # the two join stages read cache instead of racing to populate it.
     # Deliberately persisted for the result's lifetime (the simhash
-    # fingerprint precedent); registered in _SYNOPSIS_CACHE so library
-    # callers looping many resolutions can release_synopsis_cache()
-    # instead of a blanket clearCache (ADVICE r14).
-    hashes = hashes.persist()
-    hashes.count()
-    _SYNOPSIS_CACHE.append(hashes)
+    # fingerprint precedent); registered so library callers looping
+    # many resolutions can release_session_cache() instead of a blanket
+    # clearCache (ADVICE r14).
+    hashes = persist_now(hashes)
     sides = _banded(hashes, hash_col, id_col, max_distance)
     a, b = sides.alias("a"), sides.alias("b")
     cand = a.join(

@@ -34,30 +34,11 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
 from deva_spark.functions.text import word_shingles
+from deva_spark.session import persist_now
 
 NUM_HASHES = 12
 BAND_SIZE = 3  # => 4 bands; collision prob for jaccard s: 1-(1-s^3)^4
 M61 = (1 << 61) - 1  # Mersenne prime modulus for the permutation family
-
-
-#: persisted signature/shingle-index DataFrames created by the
-#: unstaged paths of :func:`near_duplicates`, :func:`ngram_jaccard_pairs`
-#: and :func:`incremental_shingle_overlap`, released by
-#: :func:`release_sig_cache` — the vectors._NEARDUP_CACHE /
-#: substring._INDEX_CACHE discipline (r12 review: looping sessions
-#: otherwise accumulate unreachable corpus-sized cached blocks).
-_SIG_CACHE: list[DataFrame] = []
-
-
-def release_sig_cache() -> int:
-    """Unpersist every signature/shingle index the unstaged paths
-    cached; returns how many were released. Safe any time after the
-    caller has materialized its result."""
-    n = 0
-    while _SIG_CACHE:
-        _SIG_CACHE.pop().unpersist()
-        n += 1
-    return n
 
 
 def minhash_signature(text: Column, num_hashes: int = NUM_HASHES) -> Column:
@@ -302,16 +283,16 @@ def near_duplicates(
     ``sigs``: a precomputed ``(doc_id, sig)`` signature table (the
     build-once-query-many artifact — signatures depend only on the text,
     so one table serves every consumer; the caller owns its persistence).
-    When omitted, signatures are computed and persisted here."""
+    When omitted, signatures are computed and persisted here, released
+    by ``session.release_session_cache``."""
     if sigs is None:
         # Persist the signatures: they feed the band explosion AND both
         # sides of the verify join — without this the 12×|shingles| MD5
         # evaluation runs three times (observed 191 s → ~8 s at sf0.1). At
         # cluster scale this is a materialized signature table (write
         # once, join many).
-        sigs = signatures(docs, id_col, text_col).persist()
-        sigs.count()  # eager: referenced by bands + both verify-join sides
-        _SIG_CACHE.append(sigs)
+        # eager: referenced by bands + both verify-join sides
+        sigs = persist_now(signatures(docs, id_col, text_col))
     cands = lsh_candidate_pairs(sigs)
     return _verify_candidates(cands, sigs, min_matches)
 
@@ -348,22 +329,19 @@ def ngram_jaccard_pairs(
 
     from deva_spark.session import ensure_parallelism
 
-    sh = (
+    # Materialize the cache eagerly: the plan references `sh` four times
+    # (both join sides + two size lookups); without a barrier one job races
+    # to compute the subtree 4× before any partition lands in cache
+    # (observed 8 s vs 1 s). Cluster-scale equivalent: stage the shingle
+    # index to a table once, then join against it.
+    sh = persist_now(
         ensure_parallelism(docs)
         .select(
             F.col(id_col).alias("doc_id"),
             F.explode(distinct_word_shingles_udf(F.col(text_col))).alias("s"),
         )
         .select("doc_id", F.xxhash64("s").alias("sh"))
-        .persist()
     )
-    _SIG_CACHE.append(sh)
-    # Materialize the cache eagerly: the plan references `sh` four times
-    # (both join sides + two size lookups); without a barrier one job races
-    # to compute the subtree 4× before any partition lands in cache
-    # (observed 8 s vs 1 s). Cluster-scale equivalent: stage the shingle
-    # index to a table once, then join against it.
-    sh.count()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.select(F.col("doc_id").alias("id_a"), "sh")
     b = sh.select(F.col("doc_id").alias("id_b"), "sh")
@@ -525,11 +503,10 @@ def incremental_shingle_overlap(
     |A∩B| exact, but per-doc sizes must then come from the FULL index,
     not the pruned rows).
     """
-    n = new_index.select(
-        F.col(id_col).alias("doc_id"), F.col(sh_col).alias("sh")
-    ).persist()
-    n.count()  # batch-sized; feeds cross join, self join, and sizes
-    _SIG_CACHE.append(n)
+    # batch-sized; feeds cross join, self join, and sizes
+    n = persist_now(
+        new_index.select(F.col(id_col).alias("doc_id"), F.col(sh_col).alias("sh"))
+    )
     o = old_index.select(
         F.col(id_col).alias("doc_id"), F.col(sh_col).alias("sh")
     )

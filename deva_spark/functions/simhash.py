@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
+from deva_spark.session import persist_now
+
 BITS = 48
 NUM_CHUNKS = 4  # k+1 chunks for Hamming k=3
 CHUNK_BITS = BITS // NUM_CHUNKS  # 12
@@ -273,8 +275,8 @@ def near_duplicates(
     if fps is None:
         # Persisted: the pandas-UDF fingerprint pass feeds the chunk
         # explosion and both join sides; compute it once.
-        fps = fingerprints(docs, id_col, text_col).persist()
-        fps.count()  # eager: chunk explosion + both join sides
+        # eager: chunk explosion + both join sides
+        fps = persist_now(fingerprints(docs, id_col, text_col))
     chunks = chunk_keys(fps, banding_chunks(max_hamming))
     a = chunks.select(
         F.col("doc_id").alias("id_a"), F.col("fp").alias("fp_a"), "ci", "cv"

@@ -44,26 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from deva_spark.functions.text import words
-
-#: persisted window-index DataFrames created by the unstaged paths of
-#: :func:`substring_dup_pairs` / :func:`remove_duplicate_runs`, released
-#: by :func:`release_index_cache` — the vectors._NEARDUP_CACHE
-#: discipline (r12 review: a long-lived session looping unstaged calls
-#: otherwise accumulates unreachable corpus-sized cached blocks until
-#: eviction pressure; the staged `hashes=`/`positions=` paths never
-#: persist here).
-_INDEX_CACHE: list[DataFrame] = []
-
-
-def release_index_cache() -> int:
-    """Unpersist every window index the unstaged paths cached; returns
-    how many were released. Safe any time after the caller has
-    materialized its result."""
-    n = 0
-    while _INDEX_CACHE:
-        _INDEX_CACHE.pop().unpersist()
-        n += 1
-    return n
+from deva_spark.session import persist_now
 
 
 def window_runs(text: Column, window: int) -> Column:
@@ -137,9 +118,7 @@ def substring_dup_pairs(
         # window-explode subtree recomputes per reference (the
         # ngram_jaccard_pairs lesson). Cluster path: stage the index to
         # a table (the `subwin8` artifact) and pass ``hashes=``.
-        sh = window_hashes(docs, id_col, text_col, window).persist()
-        sh.count()
-        _INDEX_CACHE.append(sh)
+        sh = persist_now(window_hashes(docs, id_col, text_col, window))
     if df_cap is not None:
         rare = (
             sh.groupBy("wh")
@@ -474,9 +453,7 @@ def remove_duplicate_runs(
     else:
         # referenced twice (mask aggregate + cover join): barrier, or
         # the window-explode subtree recomputes per reference
-        p = window_hash_positions(docs, id_col, text_col, window).persist()
-        p.count()
-        _INDEX_CACHE.append(p)
+        p = persist_now(window_hash_positions(docs, id_col, text_col, window))
     mask = (
         p.groupBy("wh")
         .agg(

@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from deva_spark.session import persist_now
+
 
 def _half_up(raw: "np.ndarray", scale: float = 1e4) -> "np.ndarray":
     """HALF_UP rounding to ``1/scale`` — the cross-engine contract for
@@ -339,22 +341,6 @@ def lsh_topk_onepass(
     )
 
 
-#: persisted signature DFs produced by :func:`cosine_neardup_pairs`,
-#: released by :func:`release_neardup_cache`
-_NEARDUP_CACHE: list[DataFrame] = []
-
-
-def release_neardup_cache() -> int:
-    """Unpersist every signatures DataFrame :func:`cosine_neardup_pairs`
-    cached; returns how many were released. Safe to call any time after
-    the caller has materialized its result."""
-    n = 0
-    while _NEARDUP_CACHE:
-        _NEARDUP_CACHE.pop().unpersist()
-        n += 1
-    return n
-
-
 def _pair_cos_udf():
     """Vectorized pair-dot rescore: one numpy einsum per Arrow batch
     instead of an interpreted higher-order-function fold per pair (HOFs
@@ -434,16 +420,15 @@ def cosine_neardup_pairs(
 
     Caching contract: the returned plan references an eagerly-persisted
     signatures DataFrame (it feeds both candidate sides + the rescore).
-    Call :func:`release_neardup_cache` once the result is materialized —
+    Call ``session.release_session_cache`` once the result is materialized —
     repeated invocations in a long-lived session otherwise accumulate
     cached blocks until eviction pressure (ADVICE r2).
     """
     if base is None:
-        base = neardup_base(
-            vectors, n_planes, n_tables, dim, id_col, vec_col
-        ).persist()
-        base.count()  # eager: referenced by both candidate sides + rescore
-        _NEARDUP_CACHE.append(base)
+        # eager: referenced by both candidate sides + rescore
+        base = persist_now(
+            neardup_base(vectors, n_planes, n_tables, dim, id_col, vec_col)
+        )
     buckets = base.select("vid", F.posexplode("bs").alias("t", "b"))
     cand = (
         buckets.alias("a")

@@ -20,14 +20,17 @@ from deva_spark.operators import graphs
 from deva_spark.operators import joins
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-import os as _os
-from deva_spark.session import read_parquet
+from deva_spark.session import (
+    mtime_key,
+    read_parquet,
+    session_cache,
+    table_path,
+)
 from deva_spark.queries._infra import (
     ORACLE_SQL,
     _build_dup_assign,
     _doc_signatures,
     _jaccard_pairs,
-    _session_cache,
     _shared_artifact,
     _shingle5_hashes,
     _t,
@@ -340,14 +343,9 @@ def _staged_ivf_append(
     recipe; the old ``vec_id >= 450`` cutoff left a 1% training corpus
     on amplified tables). The dir is what a growing 100 TB vector store
     looks like between restages."""
-    try:
-        _mt = int(
-            _os.path.getmtime(_os.path.join(sf_dir, "embeddings.parquet"))
-        )
-    except OSError:
-        _mt = 0
-    cache = _session_cache(spark)
-    key = (sf_dir, "ivf_append", batch_where, _mt)
+    cache = session_cache(spark, "shared")
+    emb_mtime = mtime_key(table_path(sf_dir, "embeddings"))
+    key = (sf_dir, "ivf_append", batch_where, emb_mtime)
     if key not in cache:
         import tempfile
 
@@ -1319,12 +1317,8 @@ def x95(spark, sf):
     # source invalidation (ADVICE r9): a refreshed customer table within
     # one session must rebuild the bitmap, else bloom false negatives
     # silently drop matching join rows.
-    cache = _session_cache(spark)
-    try:
-        cust_mtime = _os.stat(_os.path.join(sf, "customer.parquet")).st_mtime_ns
-    except OSError:
-        cust_mtime = 0
-    bkey = (sf, "x95_bloom_bitmap", cust_mtime)
+    cache = session_cache(spark, "shared")
+    bkey = (sf, "x95_bloom_bitmap", mtime_key(table_path(sf, "customer")))
     if bkey not in cache:
         cache[bkey] = joins.build_bloom_bitmap(
             cust, "c_custkey", n_hashes=3, n_bits=1 << 14

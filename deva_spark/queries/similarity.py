@@ -24,14 +24,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-import os as _os
-from deva_spark.session import read_parquet
+from deva_spark.session import (
+    mtime_key,
+    persist_now,
+    read_parquet,
+    session_cache,
+    table_path,
+)
 from deva_spark.queries._infra import (
     ORACLE_SQL,
     _doc_index,
     _doc_signatures,
     _jaccard_pairs,
-    _session_cache,
     _shared_artifact,
     _t,
     query,
@@ -1040,32 +1044,23 @@ def _cached_win8_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     eviction pressure hit every other cached artifact)."""
     from deva_spark.functions.substring import window_hashes
 
-    cache = _session_cache(spark)
+    cache = session_cache(spark, "shared")
     key = (sf_dir, "win8_index_inline")
     if key not in cache:
         cache[key] = window_hashes(
             _t(spark, sf_dir, "documents"), window=8
         )
-    df = cache[key]
-    if df.storageLevel.useMemory is False and df.storageLevel.useDisk is False:
-        df.persist()
-        df.count()
-    return df
+    return persist_now(cache[key])
 
 
 def _staged_events(spark: SparkSession, sf_dir: str) -> str:
     """Stage the events table once per (session, sf) as ts-ordered chunks —
     the replayable input the streaming queries drain. Session-scoped via
-    the same weak-keyed cache as the doc index."""
+    the same ``"shared"`` cache as the doc index."""
     # mtime in the key: a regenerated source table within one session
-    # must restage, not replay stale chunks (the x95 bitmap / artifact-
-    # tier convention; r11 review)
-    try:
-        _mt = int(_os.path.getmtime(_os.path.join(sf_dir, "events.parquet")))
-    except OSError:
-        _mt = 0
-    cache = _session_cache(spark)
-    key = (sf_dir, "staged_events", _mt)
+    # must restage, not replay stale chunks (r11 review)
+    cache = session_cache(spark, "shared")
+    key = (sf_dir, "staged_events", mtime_key(table_path(sf_dir, "events")))
     if key not in cache:
         from deva_spark.streaming.twin import stage_event_chunks
 
@@ -1080,14 +1075,10 @@ def _staged_docs(
     arrival split by default) once per (session, sf) as doc_id-ordered
     chunks for the streaming incremental-dedup drain."""
     # mtime in the key: a regenerated source table within one session
-    # must restage, not replay stale chunks (the x95 bitmap / artifact-
-    # tier convention; r11 review)
-    try:
-        _mt = int(_os.path.getmtime(_os.path.join(sf_dir, "documents.parquet")))
-    except OSError:
-        _mt = 0
-    cache = _session_cache(spark)
-    key = (sf_dir, "staged_docs", where, _mt)
+    # must restage, not replay stale chunks (r11 review)
+    cache = session_cache(spark, "shared")
+    docs_mtime = mtime_key(table_path(sf_dir, "documents"))
+    key = (sf_dir, "staged_docs", where, docs_mtime)
     if key not in cache:
         from deva_spark.streaming.twin import stage_doc_chunks
 

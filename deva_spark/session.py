@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -131,28 +132,66 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-#: Attribute name of the per-session memo of table-read PLANS (and scan
-#: partition counts), keyed on (abs path, file mtime).
-#: ``spark.read.parquet`` launches a schema-inference job costing
-#: 150-300 ms of driver latency per call — the single largest fixed
-#: cost of every registry query (r14 optimization pass: 146 queries x
-#: 1-3 reads each). A DataFrame is an immutable logical plan, so
-#: handing the same object back is pure plan reuse: every action still
-#: scans the parquet files (this is NOT result caching — nothing is
-#: persisted), and the mtime in the key invalidates the memo the moment
-#: testdata is regenerated. The memo lives ON the session object
-#: (ADVICE r14: the previous WeakKeyDictionary's VALUES held DataFrames
-#: that strongly referenced the session, so entries could never be
-#: collected — an attribute dies with its session by construction).
-_READ_CACHE_ATTR = "_deva_read_cache"
+#: Name of the session attribute holding the one per-session cache.
+#: It lives in the session's own ``__dict__``, so it dies with its
+#: session: a module-level or weak-keyed registry whose values are
+#: DataFrames keeps the session alive, because every DataFrame
+#: references its session. One dict per kind:
+#:
+#: - ``"plan"``: constructed query plans (``queries._infra.query``);
+#: - ``"read"``: parquet read plans and scan partition counts;
+#: - ``"shared"``: in-session artifact fallbacks, bitmaps and staged
+#:   chunk dirs the query modules build once per session;
+#: - ``"persisted"``: DataFrames :func:`persist_now` materialized,
+#:   unpersisted by :func:`release_session_cache`.
+#:
+#: Memoized plans are pure plan reuse: every action still computes from
+#: its inputs. Keys carry :func:`mtime_key` of the files they depend
+#: on, so regenerated data invalidates them.
+_CACHE_ATTR = "_deva_session_cache"
 
 
-def _read_cache(spark: SparkSession) -> dict:
-    cache = getattr(spark, _READ_CACHE_ATTR, None)
-    if cache is None:
-        cache = {}
-        setattr(spark, _READ_CACHE_ATTR, cache)
-    return cache
+def session_cache(spark: SparkSession, kind: str) -> dict:
+    """The per-session dict of one cache ``kind``. Both levels are made
+    with ``dict.setdefault``, which is atomic under the GIL, so clients
+    sharing a session can never race two dicts into existence."""
+    return spark.__dict__.setdefault(_CACHE_ATTR, {}).setdefault(kind, {})
+
+
+def persist_now(df: DataFrame) -> DataFrame:
+    """Persist ``df``, register it for :func:`release_session_cache` and
+    materialize it with ``count()``. The eager count is the barrier a
+    multiply-referenced intermediate needs: a lazily cached DataFrame
+    read twice in one job races its own materialization and computes
+    the subtree once per reference. A no-op when ``df`` is already
+    persisted; ``catalog.clearCache()`` resets the level, so the next
+    call materializes it again."""
+    if df.storageLevel == StorageLevel.NONE:
+        df.persist()
+        session_cache(df.sparkSession, "persisted")[id(df)] = df
+        df.count()
+    return df
+
+
+def release_session_cache(spark: SparkSession) -> int:
+    """Unpersist every DataFrame :func:`persist_now` registered on this
+    session and empty all its cache kinds; returns how many were
+    unpersisted. Safe any time after the results that read them were
+    materialized."""
+    persisted = spark.__dict__.pop(_CACHE_ATTR, {}).get("persisted", {})
+    for df in persisted.values():
+        df.unpersist()
+    return len(persisted)
+
+
+def mtime_key(path: str) -> int | None:
+    """Modification time of ``path`` in ns (None when missing): the one
+    invalidation signal of every in-session cache key, fine enough that
+    a file rewritten within the same second still invalidates."""
+    try:
+        return os.stat(path).st_mtime_ns
+    except OSError:
+        return None
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -161,21 +200,20 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     bigint of nanos-since-epoch; ``timestamp_micros(ns div 1000)`` restores
     the timestamp exactly (generator emits µs-grain values).
 
-    The returned plan is memoized per (session, path, mtime) — see
-    :data:`_READ_CACHE_ATTR`."""
+    The returned plan is memoized in the session's ``"read"`` cache,
+    keyed on (path, mtime). ``spark.read.parquet`` launches a
+    schema-inference job costing 150-300 ms of driver latency per call,
+    and a DataFrame is an immutable logical plan, so handing the same
+    object back is pure plan reuse: nothing is persisted."""
     from pyspark.sql import functions as F
 
     path = table_path(sf_dir, name)
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = None
-    cache = _read_cache(spark)
-    key = (os.path.abspath(path), mtime)
     # confs re-applied on EVERY return (ADVICE r14: a cache hit skipped
     # them, fragile if a caller mutates session confs mid-run) — two
     # spark.conf.set calls are driver-local, no job
     ensure_session_confs(spark)
+    cache = session_cache(spark, "read")
+    key = (os.path.abspath(path), mtime_key(path))
     hit = cache.get(key)
     if hit is not None:
         return hit
@@ -195,12 +233,8 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     per-session query-plan memo. Keyed on (abs path, dir mtime): a
     re-staged artifact directory gets a fresh mtime, invalidating the
     entry."""
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = None
-    cache = _read_cache(spark)
-    key = (os.path.abspath(path), mtime)
+    cache = session_cache(spark, "read")
+    key = (os.path.abspath(path), mtime_key(path))
     hit = cache.get(key)
     if hit is not None:
         return hit
@@ -217,13 +251,9 @@ def scan_partitions(spark: SparkSession, sf_dir: str, name: str) -> int:
     non-pushable filter or projection on top never changes it — so
     every :func:`ensure_parallelism` caller over the same table can
     share one probe (r14 optimization pass)."""
-    cache = _read_cache(spark)
+    cache = session_cache(spark, "read")
     path = table_path(sf_dir, name)
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = None
-    key = ("#nparts", os.path.abspath(path), mtime)
+    key = ("#nparts", os.path.abspath(path), mtime_key(path))
     hit = cache.get(key)
     if hit is None:
         hit = read_table(spark, sf_dir, name).rdd.getNumPartitions()

@@ -13,8 +13,7 @@ from __future__ import annotations
 import pytest
 
 from deva_spark import queries as Q
-from deva_spark.queries._infra import _PLAN_CACHE_ATTR
-from deva_spark.session import get_spark
+from deva_spark.session import get_spark, session_cache
 
 SF = "/root/testdata/sf0.001"
 
@@ -25,7 +24,7 @@ def spark():
 
 
 def _cache(spark):
-    return getattr(spark, _PLAN_CACHE_ATTR, {})
+    return session_cache(spark, "plan")
 
 
 def test_memoized_query_identical_results_fresh_node(spark):

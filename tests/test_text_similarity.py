@@ -7,6 +7,7 @@ from deva_spark.functions import minhash as mh
 from deva_spark.functions import simhash as sh
 from deva_spark.functions import text as T
 from deva_spark.functions import vectors as V
+from deva_spark.session import release_session_cache
 
 
 @pytest.fixture(scope="module")
@@ -160,7 +161,7 @@ def test_ann_routes_agree_on_degenerate_vectors(spark, emb):
     empty_q = both.filter(F.col("vec_id") < 0)
     out = V.lsh_topk_onepass(both, empty_q, k=5)
     assert out.columns == ["qid", "vec_id", "cos", "rnk"] and out.count() == 0
-    V.release_neardup_cache()
+    release_session_cache(spark)
 
 
 def test_centroids_shape(spark, emb):
