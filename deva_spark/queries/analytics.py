@@ -221,7 +221,7 @@ def x63(spark, sf):
 
     s = events_file_stream(spark, _staged_events(spark, sf), files_per_trigger=2)
     counts = run_available_now(
-        tumbling_counts(s), "x63_drain", output_mode="complete", state_partitions=8
+        tumbling_counts(s), "x63_drain", output_mode="complete"
     ).select(F.col("w").alias("hr"), "event_type", "cnt")
     w = Window.partitionBy("hr").orderBy(F.desc("cnt"), F.asc("event_type"))
     return (
@@ -435,7 +435,7 @@ def x69(spark, sf):
 
     s = events_file_stream(spark, _staged_events(spark, sf), files_per_trigger=2)
     conv = run_available_now(
-        streaming_funnel(s, _FUNNEL_STEPS), "x69_drain", output_mode="append", state_partitions=8
+        streaming_funnel(s, _FUNNEL_STEPS), "x69_drain", output_mode="append"
     )
     steps_df = spark.createDataFrame(
         [(i + 1, t) for i, t in enumerate(_FUNNEL_STEPS)],
@@ -506,7 +506,7 @@ def x71(spark, sf):
     days_stream = s.select(
         "user_id", F.to_date("ts").alias("_d")
     ).dropDuplicates(["user_id", "_d"])
-    days = run_available_now(days_stream, "x71_drain", output_mode="append", state_partitions=8)
+    days = run_available_now(days_stream, "x71_drain", output_mode="append")
     # fresh attribute ids for the self-join's aggregate side (a memory-
     # sink view joined with its own aggregate otherwise carries
     # conflicting references)

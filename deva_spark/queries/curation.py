@@ -44,7 +44,7 @@ def x33(spark, sf):
     from deva_spark.streaming.twin import events_file_stream, run_available_now, tumbling_counts
 
     s = events_file_stream(spark, _staged_events(spark, sf), files_per_trigger=2)
-    return run_available_now(tumbling_counts(s), "x33_drain", output_mode="complete", state_partitions=8)
+    return run_available_now(tumbling_counts(s), "x33_drain", output_mode="complete")
 
 
 @query(
@@ -64,7 +64,7 @@ def x34(spark, sf):
     from deva_spark.streaming.twin import events_file_stream, run_available_now, session_counts
 
     s = events_file_stream(spark, _staged_events(spark, sf), files_per_trigger=2)
-    return run_available_now(session_counts(s), "x34_drain", output_mode="complete", state_partitions=8)
+    return run_available_now(session_counts(s), "x34_drain", output_mode="complete")
 
 
 @query(
@@ -86,7 +86,7 @@ def x35(spark, sf):
 
     s = events_file_stream(spark, _staged_events(spark, sf), files_per_trigger=2)
     return run_available_now(
-        streaming_running_sum_exact(s), "x35_drain", output_mode="append", state_partitions=8
+        streaming_running_sum_exact(s), "x35_drain", output_mode="append"
     )
 
 
@@ -114,7 +114,7 @@ def x36(spark, sf):
 
     s = events_file_stream(spark, _staged_events(spark, sf), files_per_trigger=2)
     out = run_available_now(
-        streaming_zscore_anomalies(s), "x36_drain", output_mode="append", state_partitions=8
+        streaming_zscore_anomalies(s), "x36_drain", output_mode="append"
     )
     return out.select(
         "user_id", "event_id", F.round("z", 2).cast("double").alias("z")
@@ -183,7 +183,7 @@ def x38(spark, sf):
             F.col("r.event_id").alias("purchase_id"),
         ),
         "x38_drain",
-        output_mode="append", state_partitions=8,
+        output_mode="append",
     )
     return out
 
@@ -544,7 +544,7 @@ def x49(spark, sf):
 
     s = events_file_stream(spark, _staged_events(spark, sf), files_per_trigger=2)
     return run_available_now(
-        streaming_first_event(s, "user_id"), "x49_drain", output_mode="complete", state_partitions=8
+        streaming_first_event(s, "user_id"), "x49_drain", output_mode="complete"
     )
 
 

@@ -24,6 +24,7 @@ from deva_spark.session import (
     mtime_key,
     read_parquet,
     session_cache,
+    session_tempdir,
     table_path,
 )
 from deva_spark.queries._infra import (
@@ -329,7 +330,7 @@ def x78(spark, sf):
     return run_available_now(
         streaming_incremental_pairs(s, old, window=8),
         "x78_drain",
-        output_mode="complete", state_partitions=8,
+        output_mode="complete",
     )
 
 
@@ -347,9 +348,7 @@ def _staged_ivf_append(
     emb_mtime = mtime_key(table_path(sf_dir, "embeddings"))
     key = (sf_dir, "ivf_append", batch_where, emb_mtime)
     if key not in cache:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="deva_ivf_inc_")
+        path = session_tempdir(spark, "deva_ivf_inc_")
         emb = _t(spark, sf_dir, "embeddings")
         V.ivf_stage(emb.filter(~F.expr(batch_where)), path)
         V.ivf_append(spark, path, emb.filter(F.expr(batch_where)))

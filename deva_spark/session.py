@@ -15,6 +15,8 @@ every pandas interchange so UDF stages are vectorized.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -143,7 +145,10 @@ def ensure_session_confs(spark: SparkSession) -> None:
 #: - ``"shared"``: in-session artifact fallbacks, bitmaps and staged
 #:   chunk dirs the query modules build once per session;
 #: - ``"persisted"``: DataFrames :func:`persist_now` materialized,
-#:   unpersisted by :func:`release_session_cache`.
+#:   unpersisted by :func:`release_session_cache`;
+#: - ``"tempdirs"``: directories :func:`session_tempdir` made (staged
+#:   replay chunks, in-session layouts), deleted by
+#:   :func:`release_session_cache`.
 #:
 #: Memoized plans are pure plan reuse: every action still computes from
 #: its inputs. Keys carry :func:`mtime_key` of the files they depend
@@ -173,14 +178,25 @@ def persist_now(df: DataFrame) -> DataFrame:
     return df
 
 
+def session_tempdir(spark: SparkSession, prefix: str) -> str:
+    """A fresh ``tempfile.mkdtemp`` directory registered with this
+    session, so :func:`release_session_cache` deletes it."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    session_cache(spark, "tempdirs")[path] = None
+    return path
+
+
 def release_session_cache(spark: SparkSession) -> int:
     """Unpersist every DataFrame :func:`persist_now` registered on this
-    session and empty all its cache kinds; returns how many were
-    unpersisted. Safe any time after the results that read them were
-    materialized."""
-    persisted = spark.__dict__.pop(_CACHE_ATTR, {}).get("persisted", {})
+    session, delete every :func:`session_tempdir` directory and empty all
+    its cache kinds; returns how many DataFrames were unpersisted. Safe
+    any time after the results that read them were materialized."""
+    cache = spark.__dict__.pop(_CACHE_ATTR, {})
+    persisted = cache.get("persisted", {})
     for df in persisted.values():
         df.unpersist()
+    for path in cache.get("tempdirs", {}):
+        shutil.rmtree(path, ignore_errors=True)
     return len(persisted)
 
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -122,21 +123,49 @@ RUNNING_OUT_SCHEMA = "user_id long, event_id long, rs double"
 CENTS_STATE_SCHEMA = "total long"
 
 
+_INT64 = np.iinfo(np.int64)
+
+
 def _running_sum_cents_fn(key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
     """Exact-integer running sum: the micro-batch input carries a ``cents``
     bigint column (value pre-scaled by the caller), the carried state is one
     int, and the emitted total is ``cents/100`` — bit-identical to the batch
-    DECIMAL running fold regardless of accumulation order."""
+    DECIMAL running fold regardless of accumulation order.
+
+    Vectorized: rows are put in (ts, event_id) order by ``np.lexsort`` and
+    the totals are one int64 ``cumsum`` seeded with the carried total.
+    Raises ``OverflowError`` when a partial sum could leave int64, before
+    the cumsum could wrap."""
     (total,) = state.get if state.exists else (0,)
-    rows = []
+    total = int(total)
+    outs = []
     for pdf in pdfs:
-        pdf = pdf.sort_values(["ts", "event_id"])
-        for _, row in pdf.iterrows():
-            total += int(row["cents"])
-            rows.append((int(key[0]), int(row["event_id"]), total / 100.0))
+        if pdf.empty:
+            continue
+        event_id = pdf["event_id"].to_numpy(dtype=np.int64)
+        order = np.lexsort((event_id, pdf["ts"].to_numpy()))
+        cents = pdf["cents"].to_numpy(dtype=np.int64)[order]
+        n = len(cents)
+        lo = total + n * min(int(cents.min()), 0)
+        hi = total + n * max(int(cents.max()), 0)
+        if lo < _INT64.min or hi > _INT64.max:
+            raise OverflowError(
+                f"running sum of user {key[0]} could leave int64 cents"
+            )
+        run = np.cumsum(np.concatenate((np.array([total], np.int64), cents)))[1:]
+        total = int(run[-1])
+        outs.append(
+            pd.DataFrame(
+                {
+                    "user_id": np.full(n, key[0], dtype=np.int64),
+                    "event_id": event_id[order],
+                    "rs": run / 100.0,
+                }
+            )
+        )
     state.update((total,))
-    if rows:
-        yield pd.DataFrame(rows, columns=["user_id", "event_id", "rs"])
+    if outs:
+        yield pd.concat(outs, ignore_index=True)
 
 
 def streaming_running_sum_exact(stream_df: DataFrame) -> DataFrame:

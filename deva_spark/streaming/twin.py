@@ -16,13 +16,12 @@ per-trigger lossy-latest semantics.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from deva_spark.operators.aggregates import MONEY
-from deva_spark.session import read_table
+from deva_spark.session import read_table, session_tempdir
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -45,7 +44,7 @@ def stage_event_chunks(
     discovery order (mtime, then path) equals event-time order."""
     import time
 
-    out_dir = out_dir or tempfile.mkdtemp(prefix="deva_stream_")
+    out_dir = out_dir or session_tempdir(spark, "deva_stream_")
     ev = read_table(spark, sf_dir, "events")
     (
         ev.repartitionByRange(chunks, "ts", "event_id")
@@ -84,7 +83,7 @@ def stage_doc_chunks(
     driver touches only file metadata (rename + monotonic mtimes)."""
     import time
 
-    out_dir = out_dir or tempfile.mkdtemp(prefix="deva_docstream_")
+    out_dir = out_dir or session_tempdir(spark, "deva_docstream_")
     docs = read_table(spark, sf_dir, "documents").filter(F.expr(where))
     (
         docs.repartitionByRange(chunks, "doc_id")
@@ -159,30 +158,88 @@ def events_file_stream(
     )
 
 
+#: Logical-plan nodes of the Python stateful operators
+#: (``applyInPandasWithState``, ``transformWithStateInPandas``).
+_PY_STATEFUL_NODES = frozenset(
+    {"FlatMapGroupsInPandasWithState", "TransformWithStateInPySpark"}
+)
+
+#: Column metadata key Spark puts on a ``session_window`` column.
+_SESSION_WINDOW = "spark.sessionWindow"
+
+
+def _plan_nodes(plan):
+    """Every node of a JVM logical plan, depth first."""
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _per_key_cpu(node) -> bool:
+    """Whether a plan node's stateful operator does CPU-bound work per
+    key: a Python stateful operator, or an aggregate keyed by a session
+    window (each key's sessions are sorted and merged)."""
+    name = node.nodeName()
+    if name in _PY_STATEFUL_NODES:
+        return True
+    return name == "Aggregate" and any(
+        f.metadata().contains(_SESSION_WINDOW) for f in node.schema().fields()
+    )
+
+
+def derived_state_partitions(stream_df: DataFrame) -> int:
+    """State-partition count of a drain, read off its analyzed plan
+    (``optimizedPlan()`` raises on a streaming DataFrame); the rule and
+    its measurements are in :func:`run_available_now`. The core count is
+    ``defaultParallelism`` bounded by the CPUs this process may run on:
+    in local mode ``defaultParallelism`` is the ``local[N]`` task-slot
+    count, which can exceed the cores."""
+    plan = stream_df._jdf.queryExecution().analyzed()
+    if any(_per_key_cpu(n) for n in _plan_nodes(plan)):
+        return min(
+            stream_df.sparkSession.sparkContext.defaultParallelism,
+            len(os.sched_getaffinity(0)),
+        )
+    return 1
+
+
 def run_available_now(
     stream_df: DataFrame,
     name: str,
     output_mode: str = "complete",
-    state_partitions: int | None = None,
     state_store_provider: str | None = None,
 ) -> DataFrame:
     """Drain the stream with Trigger.AvailableNow into a memory sink and
     return the result table. AvailableNow processes the backlog in
     rate-limited micro-batches then stops — the batch-equivalence harness.
 
-    ``state_partitions`` sizes the stateful-operator partition count for
-    THIS query: Structured Streaming reads ``spark.sql.shuffle.partitions``
-    once at the query's first start and bakes it into the checkpoint
-    forever after, so the number is a per-query deployment decision —
-    sized to expected peak state volume (state rows x bytes / target
-    partition size), NOT inherited from the batch-scan parallelism
-    default. Both mis-sizings are real: a 100 TB deployment wants HUNDREDS
-    of state partitions (the session default would under-partition a
-    billion-key dedup), while a bounded replay drain wants a handful (at
-    the session default of 32, every micro-batch pays 32 state-store
-    opens/commits per stateful operator PER SIDE — measured 4x the total
-    drain wall-clock on the replay drains, pure fixed cost; results are
-    partition-count-invariant either way, which the oracle hash checks).
+    The stateful-operator partition count of THIS query is
+    :func:`derived_state_partitions`. Structured Streaming reads
+    ``spark.sql.shuffle.partitions`` once at the query's first start and
+    bakes it into the checkpoint, and it turns AQE off for stateful
+    queries, so a drain never gets the post-shuffle coalescing a batch
+    query gets: every micro-batch pays one state-store open and commit
+    per partition per stateful operator (per side of a stream-stream
+    join), whatever the data volume. The count is therefore derived from
+    the plan: a stateful operator with CPU-bound per-key work (a Python
+    stateful operator, or a session-window aggregate) gets one partition
+    per core; any other drain gets 1.
+
+    Measured at sf0.1 on a 4-core VM (warm repeats). Going from a fixed
+    8 partitions to the derived 1: x38 5.5-6.0 s -> 2.6-2.9 s, x33
+    2.3-2.6 s -> 1.0 s, x49 1.5-1.7 s -> 0.8-0.9 s, and the
+    stream-static x78, whose static side is shuffled again every
+    micro-batch, 2.2-2.5 s -> 1.5-2.2 s (medians, on each of its three
+    static-side paths). The Python stateful x35 takes 7.1-7.9 s at 8
+    partitions, 5.7-6.1 s at the derived 4 and 11.2-12.9 s at 1: fewer
+    partitions than cores starve its Python stage; x36 and x69 go from
+    5.8 and 7.7 s at 8 to 5.3 and 7.2 s at 4 (medians). The
+    session-window x34 takes 1.7 s at both 8 and 4 and 2.0 s at 1
+    (medians); at sf0.01 it takes 1.6 s at 8 and 1.3 s at 4. Results
+    are partition-count-invariant: every oracle hash matched at 8, 4, 2
+    and 1 partitions.
+
     Scoped: the session value is restored after the drain. The drain is
     synchronous, so the override window is the drain itself; if batch
     queries are planned CONCURRENTLY on the same session, run the drain
@@ -205,9 +262,8 @@ def run_available_now(
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
     )
-    prev = spark.conf.get(conf_key) if state_partitions is not None else None
-    if state_partitions is not None:
-        spark.conf.set(conf_key, str(state_partitions))
+    prev = spark.conf.get(conf_key)
+    spark.conf.set(conf_key, str(derived_state_partitions(stream_df)))
     prev_prov = (
         spark.conf.get(prov_key, None)
         if state_store_provider is not None
@@ -230,8 +286,7 @@ def run_available_now(
         )
         q.awaitTermination()
     finally:
-        if prev is not None:
-            spark.conf.set(conf_key, prev)
+        spark.conf.set(conf_key, prev)
         if state_store_provider is not None:
             if prev_prov is not None:
                 spark.conf.set(prov_key, prev_prov)
@@ -408,7 +463,7 @@ def stage_emb_chunks(
     into ``chunks`` files in vec_id order for file-stream replay."""
     import time
 
-    out_dir = out_dir or tempfile.mkdtemp(prefix="deva_emb_stream_")
+    out_dir = out_dir or session_tempdir(spark, "deva_emb_stream_")
     emb = read_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") >= min_id
     )

@@ -3,13 +3,14 @@
 Pins the lifecycle promise: everything the engine memoizes or persists
 for a session is reachable only from that session, so a dropped session
 is collectable, and ``release_session_cache`` unpersists what it
-registered. Also pins the Spark internal the plan memo's pure-plan guard
+registered and deletes the directories it made. Also pins the Spark internal the plan memo's pure-plan guard
 reads.
 """
 
 from __future__ import annotations
 
 import gc
+import os
 import sys
 import threading
 import types
@@ -20,12 +21,14 @@ from pyspark.sql.session import _monkey_patch_RDD
 
 from deva_spark import queries as Q
 from deva_spark.queries._infra import _jobs_submitted
+from deva_spark.queries.similarity import _staged_docs, _staged_events
 from deva_spark.session import (
     persist_now,
     read_table,
     release_session_cache,
     session_cache,
 )
+from deva_spark.streaming.twin import stage_emb_chunks
 
 
 def test_jobs_submitted_counts_actions(spark):
@@ -72,6 +75,21 @@ def test_release_unpersists_everything_registered(spark):
         assert release_session_cache(s3) == 2
         assert all(d.storageLevel == StorageLevel.NONE for d in (a, b))
         assert session_cache(s3, "persisted") == {}
+    finally:
+        _monkey_patch_RDD(spark)
+
+
+def test_release_deletes_staged_replay_chunks(spark, sf_dir):
+    s4 = spark.newSession()
+    try:
+        dirs = [
+            _staged_events(s4, sf_dir),
+            _staged_docs(s4, sf_dir),
+            stage_emb_chunks(s4, sf_dir, chunks=2),
+        ]
+        assert all(os.path.isdir(d) for d in dirs)
+        release_session_cache(s4)
+        assert not any(os.path.exists(d) for d in dirs)
     finally:
         _monkey_patch_RDD(spark)
 

@@ -194,22 +194,24 @@ def test_streaming_incremental_dedup_equivalence(spark, sf_dir):
         idx.unpersist()
 
 
-def test_state_partitions_scoped_and_result_invariant(spark, staged, batch_events):
-    # The override must (a) leave results identical — state partition
-    # count is physical, never semantic — and (b) restore the session
-    # value afterwards, including when the drain FAILS (the finally
-    # path), so a drain can't silently deflate the batch parallelism of
-    # everything planned after it.
+def test_state_partitions_scoped_and_result_invariant(
+    spark, staged, batch_events, monkeypatch
+):
+    # The drain's count must (a) leave results identical — state
+    # partition count is physical, never semantic — and (b) restore the
+    # session value afterwards, including when the drain FAILS (the
+    # finally path), so a drain can't silently deflate the batch
+    # parallelism of everything planned after it.
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
-    s = twin.events_file_stream(spark, staged)
-    res = twin.run_available_now(
-        twin.tumbling_counts(s), "t_sp4", state_partitions=4
-    )
-    assert spark.conf.get(key) == before
     cols = ["w", "event_type", "cnt", "sv"]
     base = twin.run_available_now(twin.tumbling_counts(
         twin.events_file_stream(spark, staged)), "t_sp_base")
+    assert spark.conf.get(key) == before
+    monkeypatch.setattr(twin, "derived_state_partitions", lambda df: 4)
+    s = twin.events_file_stream(spark, staged)
+    res = twin.run_available_now(twin.tumbling_counts(s), "t_sp4")
+    assert spark.conf.get(key) == before
     assert canon(res, cols) == canon(base, cols)
 
     # failure path: complete-mode requires an aggregation; a bare
@@ -217,9 +219,7 @@ def test_state_partitions_scoped_and_result_invariant(spark, staged, batch_event
     # raise the session conf must already be restored
     bad = twin.events_file_stream(spark, staged).select("event_id")
     with pytest.raises(Exception):
-        twin.run_available_now(
-            bad, "t_sp_bad", output_mode="complete", state_partitions=4
-        )
+        twin.run_available_now(bad, "t_sp_bad", output_mode="complete")
     assert spark.conf.get(key) == before
 
 
@@ -233,14 +233,12 @@ def test_state_store_provider_scoped_and_result_invariant(spark, staged):
     rocks = twin.run_available_now(
         twin.tumbling_counts(twin.events_file_stream(spark, staged)),
         "t_prov_rocks",
-        state_partitions=4,
         state_store_provider="rocksdb",
     )
     assert spark.conf.get(prov_key, None) == before
     base = twin.run_available_now(
         twin.tumbling_counts(twin.events_file_stream(spark, staged)),
         "t_prov_base",
-        state_partitions=4,
     )
     assert canon(rocks, cols) == canon(base, cols) and rocks.count() > 0
 
@@ -259,3 +257,39 @@ def test_stream_drain_suite_stays_bounded():
     assert rec["sf"] == 0.1
     assert len(rec["drains"]) == 10
     assert rec["value"] <= 30.0, rec["value"]
+
+
+class _CarriedTotal:
+    """Minimal GroupState stand-in holding an existing carried total."""
+
+    exists = True
+
+    def __init__(self, total):
+        self.get = (total,)
+
+    def update(self, value):
+        self.get = value
+
+
+def test_running_sum_cents_raises_before_int64_wrap():
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {
+            "event_id": [2, 1],
+            "ts": pd.to_datetime([1, 0], unit="s"),
+            "cents": [60, 60],
+        }
+    )
+    # the last partial sum lands exactly on 2**63 - 1: still exact
+    state = _CarriedTotal(2**63 - 121)
+    (out,) = stateful._running_sum_cents_fn((7,), iter([pdf]), state)
+    assert list(out["event_id"]) == [1, 2]
+    assert state.get == (2**63 - 1,)
+    # one cent more would wrap int64: it must raise, not wrap
+    with pytest.raises(OverflowError):
+        list(
+            stateful._running_sum_cents_fn(
+                (7,), iter([pdf]), _CarriedTotal(2**63 - 120)
+            )
+        )
